@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from tastytrade_sdk_spark.llmops.textops import tokens_expr
+from tastytrade_sdk_spark.session import overlap
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -390,40 +391,31 @@ def _write_batch_layout(
     cannot drift): bucket-partitioned skew-spread postings, flat
     doclen, exact integer _stats.json committed atomically and LAST.
 
-    ``dl`` may arrive LAZY: it is checkpointed HERE, after the
-    postings write has been submitted, so the doc-length
-    materialization (one corpus tokenize) runs concurrently with the
-    postings write instead of serializing ahead of it (guide §2.6);
+    ``dl`` may arrive LAZY: it is checkpointed HERE, beside the
+    postings write, so the doc-length materialization (one corpus
+    tokenize) runs concurrently with the postings write instead of
+    serializing ahead of it (guide §2.6);
     the one materialization still feeds the doclen write AND the
     stats aggregate."""
     import json
     import os
     import tempfile
-    import threading
+
+    def _doclen_write():
+        cp = dl.localCheckpoint(eager=True)
+        cp.write.mode("overwrite").parquet(os.path.join(path, "doclen"))
+        return cp
 
     # postings and doclen writes are lineage-disjoint — overlap them;
     # _stats.json still commits atomically and LAST
-    errs: "list[BaseException]" = []
-
-    def _postings_write():
-        try:
-            (
-                postings.withColumn("bucket", _bucket_col(n_buckets))
-                .repartition(n_buckets, "bucket", "term")
-                .write.mode("overwrite")
-                .partitionBy("bucket")
-                .parquet(os.path.join(path, "postings"))
-            )
-        except BaseException as e:  # noqa: BLE001 — re-raised below
-            errs.append(e)
-
-    t_post = threading.Thread(target=_postings_write)
-    t_post.start()
-    dl = dl.localCheckpoint(eager=True)
-    dl.write.mode("overwrite").parquet(os.path.join(path, "doclen"))
-    t_post.join()
-    if errs:
-        raise errs[0]
+    _, dl = overlap(
+        lambda: postings.withColumn("bucket", _bucket_col(n_buckets))
+        .repartition(n_buckets, "bucket", "term")
+        .write.mode("overwrite")
+        .partitionBy("bucket")
+        .parquet(os.path.join(path, "postings")),
+        _doclen_write,
+    )
     row = dl.agg(
         F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")
     ).collect()[0]
@@ -460,40 +452,31 @@ def bm25_index_append(
     import os
     import tempfile
 
-    import threading
-
     with open(os.path.join(path, _BM25_STATS)) as fh:
         stats = json.load(fh)
     n_buckets = stats["n_buckets"]
     postings = build_postings(
         new_docs, text_col, id_col, spread=False
     ).withColumn("bucket", _bucket_col(n_buckets))
+
+    def _doclen_append():
+        # one materialization feeds both the append and the stats delta
+        dl = doc_lengths(
+            new_docs, text_col, id_col, spread=False
+        ).localCheckpoint(eager=True)
+        dl.write.mode("append").parquet(os.path.join(path, "doclen"))
+        return dl
+
     # postings and doclen appends are lineage-disjoint and land in
     # disjoint dirs — overlap them (the _write_batch_layout /
     # stream-batch pattern); stats still commits atomically and LAST
-    errs: "list[BaseException]" = []
-
-    def _postings_append():
-        try:
-            (
-                postings.repartition(n_buckets, "bucket", "term")
-                .write.mode("append")
-                .partitionBy("bucket")
-                .parquet(os.path.join(path, "postings"))
-            )
-        except BaseException as e:  # noqa: BLE001 — re-raised below
-            errs.append(e)
-
-    t_post = threading.Thread(target=_postings_append)
-    t_post.start()
-    # one materialization feeds both the append and the stats delta
-    dl = doc_lengths(
-        new_docs, text_col, id_col, spread=False
-    ).localCheckpoint(eager=True)
-    dl.write.mode("append").parquet(os.path.join(path, "doclen"))
-    t_post.join()
-    if errs:
-        raise errs[0]
+    _, dl = overlap(
+        lambda: postings.repartition(n_buckets, "bucket", "term")
+        .write.mode("append")
+        .partitionBy("bucket")
+        .parquet(os.path.join(path, "postings")),
+        _doclen_append,
+    )
     row = dl.agg(
         F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")
     ).collect()[0]
@@ -731,50 +714,36 @@ def bm25_index_stream_batch(
         batch_df, text_col, id_col, spread=False
     ).withColumn("bucket", _bucket_col(n_buckets))
     # the postings and doclen pipelines share no lineage and land in
-    # disjoint directories — submit the postings write in a thread so
-    # the doclen checkpoint + write run CONCURRENTLY with it and the
+    # disjoint directories — overlap the postings write with the
+    # doclen checkpoint + write so they run CONCURRENTLY and the
     # per-trigger wall is max(postings, doclen), not their sum (the
     # near_dup_filter_batch admit pattern). The stats row still
     # commits LAST, preserving the existing reader window (a reader
     # could always observe postings before their epoch's stats row;
     # replay convergence covers the crash case either way).
-    import threading
+    def _doclen_write():
+        # one materialization feeds the doclen write AND the stats row
+        dl = doc_lengths(
+            batch_df, text_col, id_col, spread=False
+        ).localCheckpoint(eager=True)
+        (
+            dl.withColumn("epoch", F.lit(epoch_id))
+            .write.mode("overwrite")
+            .options(**dyn)
+            .partitionBy("epoch")
+            .parquet(f"{path}/doclen")
+        )
+        return dl
 
-    errs: "list[BaseException]" = []
-
-    def _run(fn):
-        def wrapped():
-            try:
-                fn()
-            except BaseException as e:  # noqa: BLE001 — re-raised below
-                errs.append(e)
-
-        t = threading.Thread(target=wrapped)
-        t.start()
-        return t
-
-    t_post = _run(
+    _, dl = overlap(
         lambda: postings.withColumn("epoch", F.lit(epoch_id))
         .repartition(n_buckets, "bucket", "term")
         .write.mode("overwrite")
         .options(**dyn)
         .partitionBy("epoch", "bucket")
-        .parquet(f"{path}/postings")
+        .parquet(f"{path}/postings"),
+        _doclen_write,
     )
-    dl = doc_lengths(batch_df, text_col, id_col, spread=False).localCheckpoint(
-        eager=True
-    )  # one materialization feeds the doclen write AND the stats row
-    t_dl = _run(
-        lambda: dl.withColumn("epoch", F.lit(epoch_id))
-        .write.mode("overwrite")
-        .options(**dyn)
-        .partitionBy("epoch")
-        .parquet(f"{path}/doclen")
-    )
-    for t in (t_post, t_dl):
-        t.join()
-    if errs:
-        raise errs[0]
     (
         dl.agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),

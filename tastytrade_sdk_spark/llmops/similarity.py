@@ -24,6 +24,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from tastytrade_sdk_spark.session import overlap
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -805,16 +807,6 @@ def random_projection(
         for i in range(out_dim)
     ]
     return df.select("*", *cols)
-
-
-def bucket_signature(vec: Column, planes: np.ndarray) -> Column:
-    """Sign-bit bucket id: bit i set iff vec . plane_i > 0."""
-    sig = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        lit_plane = F.array(*[F.lit(float(x)) for x in plane])
-        d = _dot(vec, lit_plane)
-        sig = sig + F.when(d > 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return sig
 
 
 def lsh_topk(
@@ -2093,26 +2085,11 @@ def knn_graph_index_write(
     # the three tables are lineage-disjoint past the units checkpoint
     # (edges <- NN-descent rounds; units <- the checkpointed snapshot;
     # entry <- a corpus re-scan) and land in disjoint dirs under tmp,
-    # so the units and entry writes run as CONCURRENT jobs while the
-    # main thread drives the NN-descent rounds + edges write (guide
-    # §2.6 overlap-independent-jobs; the bm25 sidecar precedent). The
+    # so the units and entry writes run as CONCURRENT jobs beside the
+    # NN-descent rounds + edges write (guide §2.6
+    # overlap-independent-jobs; the bm25 sidecar precedent). The
     # sidecar stamp + swap still happen strictly last, so the atomic
     # rebuild / torn-index story is unchanged.
-    import threading
-
-    errs: list[BaseException] = []
-
-    def _bg(fn):
-        def wrapped():
-            try:
-                fn()
-            except BaseException as e:  # noqa: BLE001 — re-raised below
-                errs.append(e)
-
-        t = threading.Thread(target=wrapped)
-        t.start()
-        return t
-
     def _write_units():
         (
             units.withColumn(
@@ -2140,21 +2117,18 @@ def knn_graph_index_write(
             os.path.join(tmp, "entry")
         )
 
-    threads = [_bg(_write_units), _bg(_write_entry)]
     # repartition to EXACTLY n_buckets partitions (not the session's
     # shuffle default): one task and one file per bucket dir, so the
     # write constant scales with the layout, not with a config knob
-    (
-        graph.withColumn("bucket", bucket)
+    overlap(
+        _write_units,
+        _write_entry,
+        lambda: graph.withColumn("bucket", bucket)
         .repartition(n_buckets, "bucket")
         .write.mode("overwrite")
         .partitionBy("bucket")
-        .parquet(os.path.join(tmp, "edges"))
+        .parquet(os.path.join(tmp, "edges")),
     )
-    for t in threads:
-        t.join()
-    if errs:
-        raise errs[0]
     with open(os.path.join(tmp, "_centroids_md5"), "w") as fh:
         fh.write(_centroid_digest(centroids))
     with open(os.path.join(tmp, "_graph_meta.json"), "w") as fh:

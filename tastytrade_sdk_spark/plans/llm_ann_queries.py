@@ -755,12 +755,14 @@ def ivf_index_stream_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     regression, or a mis-route fails the gate."""
     import shutil
     import tempfile
+    from functools import partial
 
     from tastytrade_sdk_spark.llmops.similarity import (
         axis_centroids,
         ivf_index_stream_batch,
         ivf_index_topk,
     )
+    from tastytrade_sdk_spark.session import overlap
 
     emb = load_table(spark, "embeddings", sf_dir)
     queries = emb.filter(F.col("vec_id") < 10).select(
@@ -780,30 +782,16 @@ def ivf_index_stream_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         # cross-epoch ordering was never part of the convergence
         # contract. The epoch-1 REPLAY stays strictly after: that
         # ordering IS the crash/restart case under test.
-        import threading
-
-        errs: list[BaseException] = []
-
-        def _fold(ep: int):
-            try:
-                ivf_index_stream_batch(
-                    corpus.filter(F.col("vec_id") % 3 == ep),
-                    f"{tmp}/index",
-                    ep,
-                    cent,
-                )
-            except BaseException as e:  # noqa: BLE001 — re-raised below
-                errs.append(e)
-
-        threads = [
-            threading.Thread(target=_fold, args=(ep,)) for ep in range(3)
-        ]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
-        if errs:
-            raise errs[0]
+        overlap(*(
+            partial(
+                ivf_index_stream_batch,
+                corpus.filter(F.col("vec_id") % 3 == ep),
+                f"{tmp}/index",
+                ep,
+                cent,
+            )
+            for ep in range(3)
+        ))
         # crash/restart: epoch 1 folds in AGAIN and must converge
         ivf_index_stream_batch(
             corpus.filter(F.col("vec_id") % 3 == 1), f"{tmp}/index", 1, cent
@@ -830,6 +818,7 @@ def ivf_index_compact_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate."""
     import shutil
     import tempfile
+    from functools import partial
 
     from tastytrade_sdk_spark.llmops.similarity import (
         axis_centroids,
@@ -838,6 +827,7 @@ def ivf_index_compact_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_index_stream_batch,
         ivf_index_topk,
     )
+    from tastytrade_sdk_spark.session import overlap
 
     emb = load_table(spark, "embeddings", sf_dir)
     queries = emb.filter(F.col("vec_id") < 10).select(
@@ -851,30 +841,16 @@ def ivf_index_compact_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         # concurrent epoch folds (disjoint partition trees, atomic +
         # idempotent sidecar stamp — the ivf_index_stream_search
         # rationale); compaction runs strictly after both
-        import threading
-
-        errs: list[BaseException] = []
-
-        def _fold(ep: int):
-            try:
-                ivf_index_stream_batch(
-                    corpus.filter(F.col("vec_id") % 3 == ep),
-                    f"{tmp}/index",
-                    ep,
-                    cent,
-                )
-            except BaseException as e:  # noqa: BLE001 — re-raised below
-                errs.append(e)
-
-        threads = [
-            threading.Thread(target=_fold, args=(ep,)) for ep in range(2)
-        ]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
-        if errs:
-            raise errs[0]
+        overlap(*(
+            partial(
+                ivf_index_stream_batch,
+                corpus.filter(F.col("vec_id") % 3 == ep),
+                f"{tmp}/index",
+                ep,
+                cent,
+            )
+            for ep in range(2)
+        ))
         ivf_index_compact(spark, f"{tmp}/index", cent)
         ivf_index_append(
             corpus.filter(F.col("vec_id") % 3 == 2), f"{tmp}/index", cent

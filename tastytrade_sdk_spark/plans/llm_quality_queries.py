@@ -310,18 +310,16 @@ def corpus_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Wall-clock shape: the signal chain (narrow checkpoint + threshold
     scalar) and the dedup chain (LSH pairs -> connected components)
-    share NO lineage below the token pass, so the dedup chain runs on
-    a helper thread. Under the default FIFO scheduler the two job
-    waves interleave at STAGE granularity (each wave has serial
-    driver-side gaps — checkpoint barriers, the components loop — that
-    the other wave's stages fill); the result is timing-independent
-    either way. Serially these two chains were ~45% + ~55% of the
-    query; overlapped, the wall is max(chain) + the final join. If the
-    main-thread chain fails, the builder JOINS the helper before
-    re-raising, so a failed build never leaks orphan jobs into the
-    shared session's next query."""
-    import threading
-
+    share NO lineage below the token pass, so the two chains run
+    concurrently through overlap(). Under the default FIFO scheduler
+    the two job waves interleave at STAGE granularity (each wave has
+    serial driver-side gaps — checkpoint barriers, the components
+    loop — that the other wave's stages fill); the result is
+    timing-independent either way. Serially these two chains were
+    ~45% + ~55% of the query; overlapped, the wall is max(chain) + the
+    final join. If either chain fails, overlap() joins the other
+    before re-raising, so a failed build never leaks orphan jobs into
+    the shared session's next query."""
     from tastytrade_sdk_spark.llmops.cluster import connected_components
     from tastytrade_sdk_spark.llmops.pipeline import (
         quality_threshold,
@@ -331,6 +329,7 @@ def corpus_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         predicted_lang,
         quality_score,
     )
+    from tastytrade_sdk_spark.session import overlap
 
     # ONE token pass serves both chains: the regex-split is the
     # heaviest shared fragment, and without the lineage cut each
@@ -338,20 +337,7 @@ def corpus_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # signal projection, once under the MinHash pass)
     toked = _tokenized_docs(spark, sf_dir).localCheckpoint(eager=True)
 
-    holder: dict = {}
-
-    def _dedup_chain():
-        try:
-            holder["comp"] = connected_components(
-                lsh_candidate_pairs(toked, k=16, bands=4, tokens_col="__toks")
-            )
-        except BaseException as e:  # surfaced on join() below
-            holder["err"] = e
-
-    th = threading.Thread(target=_dedup_chain, daemon=True)
-    th.start()
-
-    try:
+    def _signal_chain():
         narrow = toked.select(
             "doc_id",
             split_col("doc_id").alias("split"),
@@ -363,14 +349,14 @@ def corpus_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         threshold = quality_threshold(
             narrow.select("doc_id", "quality"), 0.25
         ).collect()[0]["threshold"]
-    finally:
-        # ALWAYS drain the helper: if the signal chain raised, letting
-        # the dedup thread keep submitting jobs would leak a running
-        # job wave into whatever the shared session executes next
-        th.join()
-    if "err" in holder:
-        raise holder["err"]
-    comp_t = holder["comp"]
+        return narrow, threshold
+
+    (narrow, threshold), comp_t = overlap(
+        _signal_chain,
+        lambda: connected_components(
+            lsh_candidate_pairs(toked, k=16, bands=4, tokens_col="__toks")
+        ),
+    )
     noncanon = (
         comp_t.filter(F.col("doc_id") != F.col("component"))
         .select("doc_id", F.lit(True).alias("__nc"))

@@ -708,13 +708,13 @@ def bm25_index_stream_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     a stats drift fails the gate."""
     import shutil
     import tempfile
+    from functools import partial
 
     from tastytrade_sdk_spark.llmops.retrieval import (
         bm25_index_stream_batch,
         bm25_index_topk,
     )
-
-    import threading
+    from tastytrade_sdk_spark.session import overlap
 
     docs = load_table(spark, "documents", sf_dir)
     queries = docs.filter(F.col("doc_id") < 5)
@@ -730,27 +730,15 @@ def bm25_index_stream_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         # never depended on cross-epoch ordering. The epoch-1 REPLAY
         # below still runs strictly after — that ordering is the
         # crash/restart story under test.
-        errs: list[BaseException] = []
-
-        def _fold(ep: int):
-            try:
-                bm25_index_stream_batch(
-                    docs.filter(F.col("doc_id") % 3 == ep),
-                    f"{tmp}/index",
-                    ep,
-                )
-            except BaseException as e:  # noqa: BLE001 — re-raised below
-                errs.append(e)
-
-        threads = [
-            threading.Thread(target=_fold, args=(ep,)) for ep in range(3)
-        ]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
-        if errs:
-            raise errs[0]
+        overlap(*(
+            partial(
+                bm25_index_stream_batch,
+                docs.filter(F.col("doc_id") % 3 == ep),
+                f"{tmp}/index",
+                ep,
+            )
+            for ep in range(3)
+        ))
         # crash/restart: epoch 1 folds in AGAIN and must converge
         bm25_index_stream_batch(
             docs.filter(F.col("doc_id") % 3 == 1), f"{tmp}/index", 1

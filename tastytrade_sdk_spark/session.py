@@ -18,7 +18,10 @@ same code deploys unchanged to a multi-executor cluster:
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from typing import Any
 
+from pyspark import InheritableThread
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -59,3 +62,39 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def overlap(*fns: Callable[[], Any]) -> list:
+    """Run lineage-disjoint driver jobs concurrently: each zero-argument
+    callable gets its own ``InheritableThread``, so the caller's job
+    group and local properties reach every job it submits (a plain
+    ``threading.Thread`` drops them). Every thread is joined before
+    this returns or raises, so a failure never leaves jobs running
+    into the session's next action. Returns the results in argument
+    order; if any callable raised, re-raises the error of the earliest
+    one by argument order."""
+    results: list = [None] * len(fns)
+    errs: list[BaseException | None] = [None] * len(fns)
+
+    def _slot(i: int, fn: Callable[[], Any]) -> Callable[[], None]:
+        def run() -> None:
+            try:
+                results[i] = fn()
+            except BaseException as e:  # noqa: BLE001 — re-raised below
+                errs[i] = e
+
+        return run
+
+    started: list[InheritableThread] = []
+    try:
+        for i, fn in enumerate(fns):
+            t = InheritableThread(_slot(i, fn))
+            t.start()
+            started.append(t)
+    finally:
+        for t in started:
+            t.join()
+    for e in errs:
+        if e is not None:
+            raise e
+    return results

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from tastytrade_sdk_spark.llmops.cluster import connected_components
 from tastytrade_sdk_spark.llmops.dedup import band_hashes, band_pairs
+from tastytrade_sdk_spark.session import overlap
 from tastytrade_sdk_spark.streaming.sinks import upsert_parquet_batch
 
 
@@ -212,35 +213,14 @@ def near_dup_filter_batch(
     # propagates; a half-admitted batch is the normal replay case
     # (upsert converges by key, store append self-absorbs via the
     # owner guard).
-    import threading
-
-    errs: list[BaseException] = []
-
-    def _run(fn):
-        def wrapped():
-            try:
-                fn()
-            except BaseException as e:  # noqa: BLE001 — re-raised below
-                errs.append(e)
-
-        t = threading.Thread(target=wrapped)
-        t.start()
-        return t
-
-    threads = [
-        _run(lambda: upsert_parquet_batch(kept, out_path, [id_col], [id_col])),
-        _run(
-            lambda: kept_bands.select(
-                "band_id", "band_hash", F.col(id_col).alias("owner")
-            )
-            .write.mode("append")
-            .parquet(store_path)
-        ),
-    ]
-    for t in threads:
-        t.join()
-    if errs:
-        raise errs[0]
+    overlap(
+        lambda: upsert_parquet_batch(kept, out_path, [id_col], [id_col]),
+        lambda: kept_bands.select(
+            "band_id", "band_hash", F.col(id_col).alias("owner")
+        )
+        .write.mode("append")
+        .parquet(store_path),
+    )
 
 
 def read_band_store(

@@ -35,21 +35,6 @@ def warmup_days_for(interval: str) -> int:
     return WARMUP_DAYS["default"]
 
 
-def interleave_timeframes(
-    frames: list[tuple[DataFrame, int]], time_col: str = "time"
-) -> DataFrame:
-    """O5 multi-timeframe chronological interleave: union frames tagged
-    with their interval_ms, ordered (time, interval_ms) so the shorter
-    interval sorts first on ties (replay.py:173-203)."""
-    tagged = [
-        df.withColumn("interval_ms", F.lit(ms)) for df, ms in frames
-    ]
-    out = tagged[0]
-    for t in tagged[1:]:
-        out = out.unionByName(t, allowMissingColumns=True)
-    return out.orderBy(time_col, "interval_ms")
-
-
 def run_backtest(
     signal_candles: DataFrame,
     pricing_candles: DataFrame,

@@ -78,23 +78,6 @@ def upsert_parquet_batch(
         shutil.rmtree(old)
 
 
-def latest_table_sink(
-    stream: DataFrame,
-    path: str,
-    keys: Sequence[str],
-    order_by: Sequence[str],
-    checkpoint: str,
-):
-    """K2 latest-value table: update-on-key per micro-batch."""
-    return (
-        stream.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(
-            lambda df, epoch: upsert_parquet_batch(df, path, keys, order_by)
-        )
-    )
-
-
 def append_log_sink(
     stream: DataFrame,
     path: str,

@@ -292,6 +292,52 @@ class TestStreamedIndex:
         b = bm25_topk(full, queries, k=4).collect()
         assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
+    def test_concurrent_epoch_folds_equal_serial(self, spark, tmp_path):
+        """Epoch folds overlapped as concurrent driver jobs index the
+        same as serial folds, and a replayed epoch rewrites only its own
+        partitions: dynamic partition overwrite is what lets the folds
+        (and the replay) share one index root."""
+        import os
+        from functools import partial
+
+        from tastytrade_sdk_spark.llmops.retrieval import (
+            bm25_index_stream_batch,
+            bm25_index_topk,
+        )
+        from tastytrade_sdk_spark.session import overlap
+
+        full = spark.createDataFrame(CORPUS, self._schema())
+        epochs = [full.filter(F.col("doc_id") % 3 == ep) for ep in range(3)]
+        concurrent, serial = str(tmp_path / "conc"), str(tmp_path / "ser")
+        overlap(*(
+            partial(bm25_index_stream_batch, df, concurrent, ep, 8)
+            for ep, df in enumerate(epochs)
+        ))
+        for ep, df in enumerate(epochs):
+            bm25_index_stream_batch(df, serial, ep, 8)
+        q = full.filter(F.col("doc_id") < 2)
+        got = bm25_index_topk(spark, concurrent, q, k=4).collect()
+        want = bm25_index_topk(spark, serial, q, k=4).collect()
+        assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+
+        def files(epoch):
+            out = {}
+            for table in ("postings", "doclen", "stats"):
+                root = os.path.join(concurrent, table, f"epoch={epoch}")
+                for d, _, names in os.walk(root):
+                    for n in names:
+                        st = os.stat(os.path.join(d, n))
+                        rel = os.path.relpath(os.path.join(d, n), concurrent)
+                        out[rel] = (st.st_size, st.st_mtime_ns)
+            return out
+
+        before = {ep: files(ep) for ep in range(3)}
+        assert all(before.values())
+        bm25_index_stream_batch(epochs[1], concurrent, 1, 8)
+        assert files(0) == before[0]
+        assert files(2) == before[2]
+        assert files(1) != before[1]  # the replay did rewrite epoch 1
+
     def test_replayed_epoch_converges(self, spark, tmp_path):
         from tastytrade_sdk_spark.llmops.retrieval import (
             bm25_index_stream_batch,
